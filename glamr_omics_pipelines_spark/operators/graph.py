@@ -64,7 +64,11 @@ def cooccurrence_edges(df: DataFrame, group_col: str, item_col: str,
     # exchange for the distinct and then re-exchanged on group for sizes
     # and for each join side. Same bytes cross the wire once either way;
     # three exchanges removed. Interleaved noop A/B at sf0.1 (2.39M edges,
-    # min-of-6): 1.76 -> 1.04 s, values identical.
+    # min-of-6): 1.76 -> 1.04 s, values identical. Skew cost: the
+    # exchange runs BEFORE the distinct, so a hot group's whole pre-distinct
+    # row set (duplicates included) lands on one partition, and one task
+    # dedups it alone; the old (group,item) exchange spread those rows
+    # across partitions.
     d = df.select(group_col, item_col).repartition(F.col(group_col)).distinct()
     if max_group_size is not None:
         sizes = d.groupBy(group_col).agg(F.count(F.lit(1)).alias("_gs"))

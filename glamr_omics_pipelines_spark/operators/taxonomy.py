@@ -38,71 +38,6 @@ from pyspark.sql import functions as F
 
 RANKS = ["kingdom", "phylum", "class", "order", "family", "genus", "species"]
 
-# Scale gate for the rank-proxy LCA form (guide §2.3 "shuffle keys and
-# metadata instead of payloads" / §8): above this Catalyst size estimate of
-# the input, the LCA aggregates shuffle an 8-byte dense rank per row instead
-# of the lineage-path array, and the (dimension-scale) rank→path dictionary
-# is joined back after the aggregation. Below it — every local test SF, all
-# of which are MBs — the direct array min/max form runs and plans are
-# byte-identical to r11 (pinned by tests). The estimate is driver-side plan
-# metadata (no job). 4 GiB: at that input size the array payload dominates
-# the agg exchange, and the two extra dictionary scans/joins (path-grain,
-# partial-aggregated, broadcast back) are noise by comparison.
-_RANK_PROXY_MIN_BYTES = 4 * 1024 ** 3
-
-
-def _est_plan_bytes(df: DataFrame) -> int:
-    """Total input bytes feeding a DataFrame's plan: the sum of the LEAF
-    nodes' Catalyst size estimates (driver-side, no job). Leaf estimates
-    are accurate for file sources (the file sizes); post-JOIN node
-    estimates are useless (they multiply — a 10 MB three-broadcast-join
-    input estimates at ~2.8e16), and local relations report Long.Max —
-    both classes of junk would mis-fire the gate, so only sane
-    (< 2^61) leaf values are summed and unknown leaves count 0 (i.e. the
-    gate errs toward the locally-verified direct form)."""
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            sz = int(leaves.apply(i).stats().sizeInBytes())
-            if 0 < sz < (1 << 61):
-                total += sz
-        return total
-    except Exception:
-        return -1
-
-
-def _rank_dict(df: DataFrame, path_col: str) -> DataFrame:
-    """Distinct non-null paths → dense rank in lexicographic array order.
-
-    The dictionary is dimension-scale (#distinct lineages), so the global
-    sort window and the persist are both cheap at any corpus size; it feeds
-    three subplans (rank attach + the two min/max fetch joins), hence the
-    ``_cache.register``. NULL paths are excluded so a plain equi join
-    leaves their rank NULL — matching how ``min(path)``/``max(path)``
-    skip NULL inputs in the direct form.
-    """
-    from glamr_omics_pipelines_spark.operators import _cache
-    d = (df.select(F.col(path_col).alias("_path"))
-         .filter(F.col("_path").isNotNull()).distinct())
-    w = Window.orderBy("_path")
-    return _cache.register(
-        d.withColumn("_rk", F.dense_rank().over(w).cast("long")))
-
-
-def _fetch_paths(agg: DataFrame, dic: DataFrame) -> DataFrame:
-    """Join the min/max ranks back to their paths (broadcast, left —
-    a group whose every path was NULL keeps NULL ``_mn``/``_mx``,
-    exactly the direct form's output for that group)."""
-    fetch_mn = dic.select(F.col("_rk").alias("_mnr"),
-                          F.col("_path").alias("_mn"))
-    fetch_mx = dic.select(F.col("_rk").alias("_mxr"),
-                          F.col("_path").alias("_mx"))
-    return (agg.join(F.broadcast(fetch_mn), "_mnr", "left")
-            .join(F.broadcast(fetch_mx), "_mxr", "left")
-            .drop("_mnr", "_mxr"))
-
-
 def parse_lineage(df: DataFrame, lineage_col: str, ranks: list[str] | None = None,
                   sep: str = ";[a-z]__", strip_prefix: bool = True) -> DataFrame:
     """Split a ``d__X;p__Y;...`` lineage string into rank columns + array.
@@ -225,35 +160,16 @@ def rank_ladder_rollup(df: DataFrame, rank_cols: list[str], agg_exprs: list) -> 
 
 
 def lca_aggregate(df: DataFrame, group_cols: list[str], path_col: str,
-                  out_path: str = "lca_path",
-                  rank_proxy: bool | None = None) -> DataFrame:
+                  out_path: str = "lca_path") -> DataFrame:
     """Lowest-common-ancestor lineage per group (SURVEY A11, MakeLCA).
 
     Exact and shuffle-light: the common prefix of ALL paths in a group equals
     the common prefix of the lexicographically smallest and largest paths, so
     ``min(path)`` / ``max(path)`` (both partially aggregable) carry all needed
-    state; the prefix is computed with higher-order array functions — no UDF,
-    no collect_list.
-
-    ``rank_proxy`` (None = auto above ``_RANK_PROXY_MIN_BYTES``): array
-    min/max buffers are not hash-aggregable — the direct form plans a
-    SortAggregate that double-sorts around its exchange AND ships the
-    lineage arrays through it. The proxy form maps each distinct path to a
-    dense rank (dimension-scale dictionary, lexicographic array order, so
-    ``min(rank)`` selects exactly ``min(path)``), hash-aggregates 8-byte
-    ranks, and joins the winning paths back via broadcast. Values are
-    identical (agreement-tested, incl. NULL paths); at local SFs the gate
-    never fires and the plan is byte-identical to the direct form.
+    state; the prefix is an unrolled element compare (``_common_prefix``) —
+    no UDF, no collect_list. NULL paths are skipped by min/max, so a group
+    whose every path is NULL yields a NULL ``out_path``.
     """
-    if rank_proxy is None:
-        rank_proxy = _est_plan_bytes(df) >= _RANK_PROXY_MIN_BYTES
-    if rank_proxy:
-        dic = _rank_dict(df, path_col)
-        fact = df.join(F.broadcast(dic), F.col(path_col) == F.col("_path"),
-                       "left")
-        agg = (fact.groupBy(*group_cols)
-               .agg(F.min("_rk").alias("_mnr"), F.max("_rk").alias("_mxr")))
-        return _common_prefix(_fetch_paths(agg, dic), out_path)
     mn, mx = F.min(path_col).alias("_mn"), F.max(path_col).alias("_mx")
     agg = df.groupBy(*group_cols).agg(mn, mx)
     return _common_prefix(agg, out_path)
@@ -293,42 +209,20 @@ def _common_prefix(agg: DataFrame, out_path: str,
 
 def kingdom_priority_lca(df: DataFrame, group_cols: list[str], path_col: str,
                          kingdom_col: str, priority: list[str],
-                         out_path: str = "lca_path",
-                         rank_proxy: bool | None = None) -> DataFrame:
+                         out_path: str = "lca_path") -> DataFrame:
     """MakeLCA's kingdom-priority buckets (AnnotateContigs.pl:690-696):
     compute the LCA within the highest-priority kingdom present in the group
     (e.g. G > I > B), ignoring hits from lower-priority kingdoms.
-
-    ``rank_proxy``: same scale gate and dictionary as ``lca_aggregate`` —
-    the struct aggregates below carry ``(int, long)`` instead of
-    ``(int, array)``, becoming hash-aggregable and array-free through the
-    exchange. Struct ordering is field-wise, and rank order == path order
-    (incl. NULL ranks sorting first, exactly where NULL paths sort), so the
-    selected element is identical.
     """
     prio = F.create_map(*[x for i, k in enumerate(priority)
                           for x in (F.lit(k), F.lit(i))])
     ranked = df.withColumn("_prio", F.coalesce(prio[F.col(kingdom_col)],
                                                F.lit(len(priority))))
-    if rank_proxy is None:
-        rank_proxy = _est_plan_bytes(df) >= _RANK_PROXY_MIN_BYTES
     # ONE shuffle, no join-back: struct ordering is lexicographic, so
     #   min(struct(prio, path))  = min path within the best (lowest) priority
     #   max(struct(-prio, path)) = max path within that same priority
     # — both partially aggregable, carrying the priority filter inside the
     # aggregate itself instead of a groupBy + equi-join + second groupBy.
-    if rank_proxy:
-        dic = _rank_dict(ranked, path_col)
-        fact = ranked.join(F.broadcast(dic),
-                           F.col(path_col) == F.col("_path"), "left")
-        mn_s = F.min(F.struct(F.col("_prio").alias("p"),
-                              F.col("_rk").alias("v")))
-        mx_s = F.max(F.struct((-F.col("_prio")).alias("p"),
-                              F.col("_rk").alias("v")))
-        agg = (fact.groupBy(*group_cols)
-               .agg(mn_s.getField("v").alias("_mnr"),
-                    mx_s.getField("v").alias("_mxr")))
-        return _common_prefix(_fetch_paths(agg, dic), out_path)
     mn_s = F.min(F.struct(F.col("_prio").alias("p"),
                           F.col(path_col).alias("v")))
     mx_s = F.max(F.struct((-F.col("_prio")).alias("p"),

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import signal
+
 import pytest
 
 from glamr_omics_pipelines_spark.session import get_spark
@@ -33,3 +35,29 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if "slow" in item.keywords:
             item.add_marker(skip_slow)
+
+
+# --- enforced timeouts ----------------------------------------------------
+# @pytest.mark.timeout(seconds) without the pytest-timeout plugin: a SIGALRM
+# interval timer raises TimeoutError inside the test body once it has run
+# for `seconds`, so a hung stream or job fails loudly instead of stalling
+# the whole run. Covers the test call only, not fixture set-up.
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_runtest_call(item):
+    marker = item.get_closest_marker("timeout")
+    if marker is None:
+        yield
+        return
+    seconds = marker.args[0]
+
+    def on_alarm(signum, frame):
+        raise TimeoutError(f"{item.nodeid} ran longer than {seconds} s")
+
+    previous = signal.signal(signal.SIGALRM, on_alarm)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, previous)

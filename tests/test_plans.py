@@ -379,10 +379,31 @@ def test_nx_ladder_windows_share_one_exchange(spark):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 2
 
 
+def _assert_row_local_spread(spark, q: str) -> None:
+    """A row-local query over a ``_spread`` read, pinned in both gate
+    branches. Gate off (scan split below the file size, as for any
+    multi-split table): zero exchanges. Gate on (the one-split fixture
+    file): the ONLY exchange is _spread's round-robin fan-out — no
+    requirement-driven (ENSURE_REQUIREMENTS) shuffle, no Python eval."""
+    plan = _plan(spark, q)
+    exchanges = [ln for ln in plan.splitlines()
+                 if re.search(r"\bExchange\b", ln)]
+    assert len(exchanges) == 1, (q, exchanges)
+    assert "RoundRobinPartitioning" in exchanges[0], (q, exchanges)
+    assert "ENSURE_REQUIREMENTS" not in plan, q
+    assert "EvalPython" not in plan, q
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+        plan = _plan(spark, q)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert "Exchange" not in plan, q
+    assert "EvalPython" not in plan, q
+
+
 def test_translate_dna_zero_shuffle(spark):
-    plan = _plan(spark, "translate_dna")
-    assert "Exchange" not in plan
-    assert "EvalPython" not in plan
+    _assert_row_local_spread(spark, "translate_dna")
 
 
 def test_seasonal_anomaly_baseline_broadcasts(spark):
@@ -418,9 +439,9 @@ def test_late_round4_ops_no_python_no_cartesian(spark):
 
 def test_scan_stage_ops_have_zero_exchange(spark):
     """shard_assign and minimizers are pure row-local scans."""
-    for q in ["shard_assign", "minimizers"]:
-        plan = _plan(spark, q)
-        assert "Exchange" not in plan, q
+    plan = _plan(spark, "shard_assign")
+    assert "Exchange" not in plan
+    _assert_row_local_spread(spark, "minimizers")
 
 
 def test_nearest_station_broadcasts_the_dim(spark):
@@ -441,8 +462,7 @@ def test_final_round4_ops_no_python_no_cartesian(spark):
 
 def test_row_local_bio_ops_zero_exchange(spark):
     for q in ["orf_count", "base_entropy", "translate_dna"]:
-        plan = _plan(spark, q)
-        assert "Exchange" not in plan, q
+        _assert_row_local_spread(spark, q)
 
 
 def test_rfm_segments_no_global_window(spark):

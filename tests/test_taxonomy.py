@@ -1,10 +1,10 @@
-import pytest
 """Taxonomy engine tests: lineage parse, closure, subtree rollup (with the
 reference's own invariant: subtree >= direct, not all equal —
 tax_abund_from_contigs.R:90-92), LCA."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from glamr_omics_pipelines_spark.operators import taxonomy
@@ -111,9 +111,9 @@ def test_closure_root_gets_self_row(spark):
 
 
 def _lca_agreement_corpus(spark):
-    """Adversarial agreement fixture: shared prefixes of every depth,
-    groups with one path, duplicated paths, a NULL-path row, and a group
-    whose EVERY path is NULL (the direct form yields NULL lca_path)."""
+    """Adversarial LCA fixture: shared prefixes of every depth, groups
+    with one path, duplicated paths, a NULL-path row, and a group whose
+    EVERY path is NULL (the aggregate yields NULL lca_path)."""
     rows = [
         ("g1", "B", ["r", "a", "a1"]), ("g1", "G", ["r", "a", "a2"]),
         ("g1", "G", ["r", "a", "a2"]),          # duplicate path
@@ -127,56 +127,49 @@ def _lca_agreement_corpus(spark):
     return spark.createDataFrame(rows, ["gene", "kingdom", "path"])
 
 
-def _rows_key(rows):
-    return sorted((r["gene"], tuple(r["lca_path"]) if r["lca_path"]
-                   is not None else None) for r in rows)
+def _py_lca(paths):
+    """Plain-Python MakeLCA: the common prefix of a group's non-NULL
+    lineages; a group with no lineage has no LCA."""
+    paths = [p for p in paths if p is not None]
+    if not paths:
+        return None
+    out = []
+    for ranks in zip(*paths):
+        if any(r != ranks[0] for r in ranks):
+            break
+        out.append(ranks[0])
+    return out
 
 
-@pytest.mark.slow
-def test_lca_rank_proxy_agreement(spark):
-    """The scale-gated rank-proxy form (shuffle 8-byte dense ranks, join
-    lineage paths back) must return row-identical output to the direct
-    array min/max form on an adversarial corpus."""
-    from glamr_omics_pipelines_spark.operators import _cache
+def test_lca_matches_python_reference(spark):
+    """Both LCA aggregates equal a plain-Python LCA of the same rows on an
+    adversarial corpus: NULL paths, a prefix-of pair, an all-NULL group,
+    a disjoint pair (empty LCA) and an unmapped kingdom."""
     df = _lca_agreement_corpus(spark)
-    direct = taxonomy.lca_aggregate(df, ["gene"], "path", rank_proxy=False)
-    proxy = taxonomy.lca_aggregate(df, ["gene"], "path", rank_proxy=True)
-    try:
-        assert _rows_key(direct.collect()) == _rows_key(proxy.collect())
-    finally:
-        _cache.release_caches()
+    rows = [(r["gene"], r["kingdom"], r["path"]) for r in df.collect()]
+    priority = ["G", "I", "B"]
 
+    def prio(k):
+        return priority.index(k) if k in priority else len(priority)
 
-@pytest.mark.slow
-def test_kingdom_priority_lca_rank_proxy_agreement(spark):
-    from glamr_omics_pipelines_spark.operators import _cache
-    df = _lca_agreement_corpus(spark)
-    kw = dict(kingdom_col="kingdom", priority=["G", "I", "B"])
-    direct = taxonomy.kingdom_priority_lca(df, ["gene"], "path",
-                                           rank_proxy=False, **kw)
-    proxy = taxonomy.kingdom_priority_lca(df, ["gene"], "path",
-                                          rank_proxy=True, **kw)
-    try:
-        assert _rows_key(direct.collect()) == _rows_key(proxy.collect())
-    finally:
-        _cache.release_caches()
+    groups = {}
+    for gene, kingdom, path in rows:
+        groups.setdefault(gene, []).append((prio(kingdom), path))
+    want_lca = {g: _py_lca([p for _, p in hits]) for g, hits in groups.items()}
+    want_kp = {}
+    for g, hits in groups.items():
+        best = min(k for k, _ in hits)
+        want_kp[g] = _py_lca([p for k, p in hits if k == best])
 
-
-def test_lca_rank_proxy_gate_is_size_adaptive(spark):
-    """The auto gate must NOT fire at local test sizes (plans byte-identical
-    to the direct form) and MUST fire above _RANK_PROXY_MIN_BYTES."""
-    import re
-    df = _lca_agreement_corpus(spark)
-    auto = taxonomy.lca_aggregate(df, ["gene"], "path")
-    direct = taxonomy.lca_aggregate(df, ["gene"], "path", rank_proxy=False)
-
-    def norm(d):  # strip expression IDs (fresh per-DataFrame counters)
-        return re.sub(r"#\d+", "#", d._jdf.queryExecution()
-                      .optimizedPlan().toString())
-
-    assert norm(auto) == norm(direct)
-    # the gate reads Catalyst's size estimate: a tiny frame is far below it
-    assert taxonomy._est_plan_bytes(df) < taxonomy._RANK_PROXY_MIN_BYTES
+    got_lca = {r["gene"]: r["lca_path"] for r in
+               taxonomy.lca_aggregate(df, ["gene"], "path").collect()}
+    got_kp = {r["gene"]: r["lca_path"] for r in taxonomy.kingdom_priority_lca(
+        df, ["gene"], "path", "kingdom", priority=priority).collect()}
+    assert got_lca == want_lca
+    assert got_kp == want_kp
+    # the corpus really exercises the edge cases
+    assert want_lca["g6"] is None and want_lca["g7"] == []
+    assert want_kp["g5"] == ["r", "b"] and want_kp["g7"] == ["r", "q"]
 
 
 def test_ncbi_majority_vote_reference_cases(spark):

@@ -1,9 +1,9 @@
-import pytest
 """Layer-C capstone: the full warehouse build run twice — second run must
 load ZERO new rows (the reference's anti-join idempotence contract)."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from glamr_omics_pipelines_spark import fixtures
